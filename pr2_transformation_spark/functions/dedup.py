@@ -489,16 +489,6 @@ def simhash(
     return hashed.select(F.col(id_col), total.cast("long").alias("simhash"))
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16) -> DataFrame:
-    """Groups of documents sharing an identical simhash (likely near-dups)."""
-    sh = simhash(df, text_col, id_col, bits)
-    return (
-        sh.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 # ---------------------------------------------------------------------------
 # n-gram Jaccard via inverted shingle index
 # ---------------------------------------------------------------------------

@@ -2123,10 +2123,6 @@ def _vp8l_decode_image(br: _Vp8lBitReader, w: int, h: int, allow_meta: bool):
     return out
 
 
-def _vp8l_avg2(a, b):
-    return ((a >> 1) + (b >> 1) + (a & b & 0x01010101)) & 0xFFFFFFFF
-
-
 def _px_add(a, b):
     """Per-channel modular add of two packed ARGB ints."""
     s = 0

@@ -1367,13 +1367,6 @@ def webp_anim_encode(frames: list, canvas_w: int, canvas_h: int,
     return b"RIFF" + struct.pack("<I", len(riff)) + riff
 
 
-def find_vp8_chunk_safe(payload: bytes):
-    try:
-        return find_vp8_chunk(payload)
-    except ValueError:
-        return None
-
-
 def webp_anim_composite(payload: bytes) -> "list[np.ndarray]":
     """Render every animation frame to the composited (canvas_h,
     canvas_w, 4) RGBA canvas per the container spec: the canvas starts

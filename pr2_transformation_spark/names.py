@@ -269,11 +269,3 @@ def valid_column_names(columns: list[str]) -> list[str]:
     """
     excluded = set(column_exceptions_to_exclude(columns))
     return [c for c in columns if c not in excluded]
-
-
-def validate_column_names(names: list[str]) -> list[tuple[str, str, int]]:
-    """Lint: return (and log-worthy) non-standard CID findings.
-
-    Parity: /root/reference/core/utils.py:122-136 (warning-only).
-    """
-    return find_non_standard_concept_ids(names)

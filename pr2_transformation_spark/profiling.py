@@ -225,22 +225,6 @@ def table_profile(df: DataFrame, columns: Optional[list[str]] = None) -> DataFra
     )
 
 
-def false_array_columns_for_tables(
-    dfs: dict[str, DataFrame], **kwargs
-) -> dict[str, list[str]]:
-    """Run false-array detection per table; errors yield an empty list.
-
-    Parity: /root/reference/core/utils.py:700-748.
-    """
-    out: dict[str, list[str]] = {}
-    for table, df in dfs.items():
-        try:
-            out[table] = strict_false_array_columns(df, **kwargs)
-        except Exception:
-            out[table] = []
-    return out
-
-
 def key_skew_report(
     df, key_col: str, top_k: int = 10
 ):

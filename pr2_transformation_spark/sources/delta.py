@@ -43,6 +43,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .pruning import file_stats_many, may_match, merge_candidates
+
 
 def _log_dir(path: str) -> str:
     return os.path.join(path, "_delta_log")
@@ -72,34 +74,23 @@ def _read_actions(path: str, version: int) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def _stats_may_match(add: dict, col: str, op: str, val) -> bool:
-    """False only when the add entry's stats PROVE no row of the file can
-    satisfy ``col <op> val`` — the no-false-negatives contract data
-    skipping lives by.  Missing stats (or an unknown op) keep the file."""
+def _add_bounds(add: dict, col: str) -> tuple:
+    """(min, max, all_null) of ``col`` from an add entry's ``stats``
+    JSON; None bounds when the file carries no stats for it."""
     raw = add.get("stats")
     if not raw:
-        return True
+        return None, None, False
     s = json.loads(raw) if isinstance(raw, str) else raw
-    mn = s.get("minValues", {}).get(col)
-    mx = s.get("maxValues", {}).get(col)
-    if mn is None or mx is None:
-        # a file whose every value is NULL can't match any comparison
-        n = s.get("nullCount", {}).get(col)
-        return not (n is not None and n == s.get("numRecords"))
-    try:
-        if op == "=":
-            return mn <= val <= mx
-        if op == "<":
-            return mn < val
-        if op == "<=":
-            return mn <= val
-        if op == ">":
-            return mx > val
-        if op == ">=":
-            return mx >= val
-    except TypeError:
-        return True  # incomparable literal type: keep the file
-    return True
+    n = s.get("nullCount", {}).get(col)
+    return (s.get("minValues", {}).get(col), s.get("maxValues", {}).get(col),
+            n is not None and n == s.get("numRecords"))
+
+
+def _stats_may_match(add: dict, col: str, op: str, val) -> bool:
+    """False only when the add entry's stats PROVE no row of the file can
+    satisfy ``col <op> val`` (the :func:`pruning.may_match` contract)."""
+    mn, mx, all_null = _add_bounds(add, col)
+    return may_match(mn, mx, op, val, all_null)
 
 
 # ---- deletion vectors (PROTOCOL.md "Deletion Vectors") ----------------
@@ -268,81 +259,6 @@ def _physical_schema_json(schema_json: str) -> str:
     return json.dumps({**schema, "fields": out_fields})
 
 
-def _file_stats_many(paths: "list[str]") -> "list[dict | None]":
-    """Footer stats for many files, probed in a small thread pool —
-    pyarrow's read_metadata releases the GIL, and multi-file commits
-    probed serially on the driver otherwise (r10, guide §5; the
-    iceberg writer's twin)."""
-    if len(paths) <= 4:
-        return [_file_stats(p) for p in paths]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        return list(pool.map(_file_stats, paths))
-
-
-def _file_stats(local_path: str) -> "dict | None":
-    """Per-file column statistics from the parquet FOOTER only (zero
-    data pages read): numRecords + min/max/nullCount per leaf column
-    with JSON-representable stats — the ``add.stats`` payload Delta
-    data skipping runs on.  Columns whose chunks lack stats (or carry
-    non-primitive values) are simply omitted; skipping stays
-    conservative for them."""
-    import datetime
-
-    import pyarrow.parquet as pq
-    try:
-        md = pq.ParquetFile(local_path).metadata
-    except Exception:  # noqa: BLE001 — stats are an optimization, never fatal
-        return None
-
-    def _plain(v):
-        if isinstance(v, bytes):
-            try:
-                return v.decode("utf-8")
-            except UnicodeDecodeError:
-                return None
-        if isinstance(v, (datetime.date, datetime.datetime)):
-            return v.isoformat()
-        if isinstance(v, (bool, int, float, str)):
-            return v
-        return None
-
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    skip: set = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name in skip:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                skip.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                continue
-            mn, mx = _plain(st.min), _plain(st.max)
-            if mn is None or mx is None:
-                skip.add(name)
-                mins.pop(name, None)
-                maxs.pop(name, None)
-                continue
-            mins[name] = mn if name not in mins else min(mins[name], mn)
-            maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-            if st.has_null_count:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-    return {
-        "numRecords": md.num_rows,
-        "minValues": mins,
-        "maxValues": maxs,
-        "nullCount": {k: v for k, v in nulls.items() if k not in skip},
-    }
-
-
 class DeltaTable:
     """A directory speaking the core Delta protocol."""
 
@@ -414,7 +330,7 @@ class DeltaTable:
             os.rename(os.path.join(staging, f), os.path.join(self.path, name))
             added.append(name)
         shutil.rmtree(staging)
-        stats = dict(zip(added, _file_stats_many(
+        stats = dict(zip(added, file_stats_many(
             [os.path.join(self.path, n) for n in added])))
 
         for _attempt in range(max_retries + 1):
@@ -521,42 +437,16 @@ class DeltaTable:
         # twin, guide §6): both the affected-file discovery and the
         # insert anti-join only care about target rows whose key equals
         # SOME source key, and every row's key lies inside its file's
-        # [minValues, maxValues] — so scan only files whose bounds
-        # admit at least one distinct source key (one broadcast
-        # interval join against the driver-read stats).  Files with
-        # missing stats are always kept; composite keys and oversized
-        # file lists skip pruning (full scan, the former shape).
+        # [minValues, maxValues] — so scan only the files
+        # pruning.merge_candidates admits.  Composite keys skip pruning
+        # (full scan, the former shape).
         cand = live
-        if len(on) == 1 and 32 < len(live) <= 4096:
-            # the interval-join probe is one extra (tiny) job: below a
-            # few dozen files the full scan IS the cheap path (A/B'd on
-            # q416: pruning 8 files cost ~2x the scan it saved), above
-            # it the probe is what keeps a bounded-key MERGE on a
-            # 100 TB table from scanning every live file
+        if len(on) == 1:
             pkey = mapping.get(on[0], on[0]) if mapping else on[0]
-            bounds_rows, keep_always = [], []
-            for p, add in live.items():
-                raw = add.get("stats")
-                s = (json.loads(raw) if isinstance(raw, str) else raw) \
-                    if raw else {}
-                mn = s.get("minValues", {}).get(pkey)
-                mx = s.get("maxValues", {}).get(pkey)
-                if mn is None or mx is None:
-                    keep_always.append(p)
-                else:
-                    bounds_rows.append((p, mn, mx))
-            if bounds_rows:
-                bdf = spark.createDataFrame(
-                    bounds_rows, ["__fp", "__lo", "__hi"])
-                hit = {
-                    r["__fp"]
-                    for r in keys.select(F.col(on[0]).alias("__k"))
-                    .join(F.broadcast(bdf),
-                          (F.col("__k") >= F.col("__lo"))
-                          & (F.col("__k") <= F.col("__hi")))
-                    .select("__fp").distinct().collect()
-                }
-                cand = {p: live[p] for p in hit | set(keep_always)}
+            hits = merge_candidates(
+                keys, on[0], live, lambda add: _add_bounds(add, pkey)[:2])
+            if hits is not None:
+                cand = {p: add for p, add in live.items() if p in hits}
 
         # 1. ONE bounded collect yields the affected-file list, the
         # matched-row count AND the unmatched-source row count (r11,
@@ -656,7 +546,7 @@ class DeltaTable:
         for p in affected:
             actions.append({"remove": {
                 "path": p, "deletionTimestamp": ts, "dataChange": True}})
-        added_stats = _file_stats_many(
+        added_stats = file_stats_many(
             [os.path.join(self.path, n) for n in added])
         for name, stats in zip(added, added_stats):
             full_path = os.path.join(self.path, name)
@@ -1515,7 +1405,7 @@ class DeltaTable:
         for p in small:
             actions.append({"remove": {
                 "path": p, "deletionTimestamp": ts, "dataChange": False}})
-        added_stats = _file_stats_many(
+        added_stats = file_stats_many(
             [os.path.join(self.path, n) for n in added])
         for name, stats in zip(added, added_stats):
             full = os.path.join(self.path, name)

@@ -46,6 +46,8 @@ from __future__ import annotations
 
 import struct
 
+from .pruning import may_match
+
 ORC_MAGIC = b"ORC"
 
 # postscript compression enum
@@ -699,18 +701,6 @@ def orc_stripe_statistics(buf: bytes) -> "list[dict[str, dict]]":
     return out
 
 
-def _stats_may_match(st: "dict | None", lo, hi) -> bool:
-    """False only when stats PROVE no value in [lo, hi] exists — the
-    no-false-negatives contract (parquet_meta/_bounds_may_match twin).
-    Missing stats keep the range."""
-    if st is None or st["min"] is None or st["max"] is None:
-        return True
-    try:
-        return not (st["max"] < lo or st["min"] > hi)
-    except TypeError:
-        return True  # incomparable literal: keep
-
-
 def _stripe_row_index(buf: bytes, streams, compression: str, cid: int,
                       kind: str) -> "list[dict] | None":
     """One column's RowIndex entries (stats per rowIndexStride rows)
@@ -758,10 +748,14 @@ def read_orc_bytes_pruned(buf: bytes, column: str, lo, hi,
            "rows_emitted": 0}
     data: dict[str, list] = {n: [] for n in keep}
 
+    def _may_hold(st: "dict | None") -> bool:
+        return st is None or may_match(st["min"], st["max"], "between",
+                                       (lo, hi))
+
     for si, sraw in enumerate(footer.get(3, [])):
         acc["stripes_total"] += 1
         st = sstats[si].get(column) if si < len(sstats) else None
-        if not _stats_may_match(st, lo, hi):
+        if not _may_hold(st):
             # stripe proven out by tail metadata alone: bytes untouched
             nr = _pb_decode(sraw)[5][0]
             acc["row_groups_total"] += (
@@ -775,7 +769,7 @@ def read_orc_bytes_pruned(buf: bytes, column: str, lo, hi,
         if ri:
             spans = [(g * stride, min((g + 1) * stride, num_rows))
                      for g in range(len(ri))]
-            verdicts = [_stats_may_match(st_g, lo, hi) for st_g in ri]
+            verdicts = [_may_hold(st_g) for st_g in ri]
         else:  # no index: the whole stripe is one group
             spans = [(0, num_rows)]
             verdicts = [True]

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import struct
 
+from .pruning import may_match
+
 # thrift compact type codes
 _STOP, _TRUE, _FALSE, _BYTE, _I16, _I32, _I64 = 0, 1, 2, 3, 4, 5, 6
 _DOUBLE, _BINARY, _LIST, _SET, _MAP, _STRUCT = 7, 8, 9, 10, 11, 12
@@ -314,12 +316,11 @@ def prune_pages(column_index: dict, offset_index: list,
                 if i + 1 < n_pages else rg_num_rows) - 1
         if column_index is None:
             selected, mn, mx = True, None, None
-        elif column_index["null_pages"][i]:
-            selected, mn, mx = False, None, None
         else:
-            mn, mx = column_index["min"][i], column_index["max"][i]
-            selected = (True if mn is None or mx is None
-                        else not (mx < lo or mn > hi))
+            all_null = bool(column_index["null_pages"][i])
+            mn, mx = ((None, None) if all_null else
+                      (column_index["min"][i], column_index["max"][i]))
+            selected = may_match(mn, mx, "between", (lo, hi), all_null)
         out.append({"page": i, "first_row": first, "last_row": last,
                     "min": mn, "max": mx, "selected": selected})
     return out
@@ -329,14 +330,15 @@ def prune_row_groups(footer: dict, column: str, lo, hi) -> list[dict]:
     """The planner move the footer exists for: which row groups can
     contain rows with ``lo <= column <= hi``?  A group survives unless
     its stats PROVE exclusion (max < lo or min > hi); groups with
-    missing stats always survive (pruning must be conservative)."""
+    missing stats, or stats a bound cannot be compared with, always
+    survive (pruning must be conservative)."""
     out = []
     for i, rg in enumerate(footer["row_groups"]):
         col = next((c for c in rg["columns"] if c["path"] == column), None)
         if col is None:
             raise ValueError(f"column {column!r} not in row group {i}")
         mn, mx = col["min"], col["max"]
-        selected = True if mn is None or mx is None else not (mx < lo or mn > hi)
+        selected = may_match(mn, mx, "between", (lo, hi))
         out.append({"row_group": i, "min": mn, "max": mx,
                     "num_values": col["num_values"], "selected": selected})
     return out

@@ -68,6 +68,9 @@ def test_prune_row_groups_semantics(typed_file):
     # all-excluding predicate
     plan = prune_row_groups(footer, "i64", 10**9, 2 * 10**9)
     assert not any(p["selected"] for p in plan)
+    # incomparable literal: no proof of exclusion, every group kept
+    plan = prune_row_groups(footer, "i64", "a", "z")
+    assert all(p["selected"] for p in plan)
     with pytest.raises(ValueError, match="not in row group"):
         prune_row_groups(footer, "nope", 0, 1)
 
