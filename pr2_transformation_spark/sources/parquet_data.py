@@ -870,7 +870,7 @@ def read_parquet_bytes_page_filtered(
         col_starts = {n: sorted(rows_vals[n]) for n in names}
         for first, vals in sorted(rows_vals[column].items()):
             for off, v in enumerate(vals):
-                if v is None or v < lo or v > hi:
+                if v is None or not lo <= v <= hi:  # NaN fails too
                     continue
                 row = first + off
                 for name in names:

@@ -35,28 +35,34 @@ def may_match(mn, mx, op: str, val, all_null: bool = False) -> bool:
     inclusive ``(lo, hi)`` range) or ``"in"`` (``val`` is a SORTED key
     list; true iff some key lies inside ``[mn, mx]``).  A missing bound
     keeps the file unless ``all_null`` says every value is NULL; an
-    incomparable ``val`` and an unknown op keep it."""
+    incomparable ``val``, unordered bounds (a NaN bound: the writers
+    take min/max with Python ``min()``/``max()``, so a chunk whose first
+    value is NaN gets NaN for both) and an unknown op keep it.  Each
+    test is written as "not (a comparison that proves exclusion)", so a
+    NaN literal, which makes every comparison False, keeps it too."""
     if mn is None or mx is None:
         return not all_null
     try:
+        if not mn <= mx:
+            return True  # unordered bounds prove nothing
         if op == "=":
-            return mn <= val <= mx
+            return not (val < mn or val > mx)
         if op == "<":
-            return mn < val
+            return not mn >= val
         if op == "<=":
-            return mn <= val
+            return not mn > val
         if op == ">":
-            return mx > val
+            return not mx <= val
         if op == ">=":
-            return mx >= val
+            return not mx < val
         if op == "between":
             lo, hi = val
-            return mx >= lo and mn <= hi
+            return not (mx < lo or mn > hi)
         if op == "in":
             i = bisect.bisect_left(val, mn)
-            return i < len(val) and val[i] <= mx
-    except TypeError:
-        return True  # incomparable literal type: keep the file
+            return i < len(val) and not val[i] > mx
+    except (TypeError, ArithmeticError):
+        return True  # incomparable (or Decimal NaN) literal: keep the file
     return True
 
 

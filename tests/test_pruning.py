@@ -19,6 +19,18 @@ from pr2_transformation_spark.sources import delta as delta_mod
 from pr2_transformation_spark.sources import iceberg as iceberg_mod
 from pr2_transformation_spark.sources.delta import DeltaTable
 from pr2_transformation_spark.sources.iceberg import IcebergTable
+from pr2_transformation_spark.sources.orc import read_orc_bytes_pruned
+from pr2_transformation_spark.sources.orc_write import write_orc_bytes
+from pr2_transformation_spark.sources.parquet_data import (
+    read_parquet_bytes_page_filtered,
+)
+from pr2_transformation_spark.sources.parquet_meta import (
+    prune_pages,
+    prune_row_groups,
+    read_footer_bytes,
+    read_page_index_bytes,
+)
+from pr2_transformation_spark.sources.parquet_write import write_parquet_bytes
 from pr2_transformation_spark.sources.pruning import (
     PROBE_MIN_FILES,
     may_match,
@@ -79,6 +91,47 @@ def test_may_match_keeps_incomparable_types(data):
         assert may_match(mn, mx, op, val)
     assert may_match(mn, mx, "between", (val, val))
     assert may_match(mn, mx, "in", [val])
+
+
+def test_may_match_keeps_nan_bounds_and_literals():
+    """NaN orders against nothing, so neither a NaN bound nor a NaN
+    literal proves that no value can match."""
+    nan = float("nan")
+    cases = [(op, 0.5) for op in _OPS] + [("between", (0.0, 1.0)),
+                                          ("in", [0.5])]
+    for op, val in cases:
+        assert may_match(nan, nan, op, val), op
+        assert may_match(nan, 2.0, op, val), op
+    for op in _OPS:
+        assert may_match(0.0, 1.0, op, nan), op
+    assert may_match(0.0, 1.0, "between", (nan, nan))
+    assert may_match(decimal.Decimal(0), decimal.Decimal(1), "=",
+                     decimal.Decimal("NaN"))
+
+
+def test_nan_first_chunk_survives_range_scans():
+    """The parquet and ORC writers take bounds with Python min()/max(),
+    so a float chunk whose first value is NaN is written with NaN for
+    both bounds.  Row-group, page and stripe pruning must keep that
+    chunk and return its matching rows."""
+    vals = [float("nan")] + [float(i) for i in range(1, 400)]
+    want = [float(i) for i in range(10, 21)]
+    buf = write_parquet_bytes([("v", "DOUBLE", vals)], codec="none",
+                              row_group_rows=200, page_rows=100,
+                              page_index=True)
+    footer = read_footer_bytes(buf)
+    plan = prune_row_groups(footer, "v", 10.0, 20.0)
+    assert [p["selected"] for p in plan] == [True, False]
+    chunk = read_page_index_bytes(buf, footer)[0][0]
+    pages = prune_pages(chunk["column_index"], chunk["offset_index"], 200,
+                        10.0, 20.0)
+    assert [p["selected"] for p in pages] == [True, False]
+    _, cols, _ = read_parquet_bytes_page_filtered(buf, "v", 10.0, 20.0)
+    assert cols["v"] == want
+    orc = write_orc_bytes([("v", "double", vals)], stripe_rows=200)
+    _, cols, acc = read_orc_bytes_pruned(orc, "v", 10.0, 20.0)
+    assert cols["v"] == want
+    assert (acc["stripes_read"], acc["stripes_total"]) == (1, 2)
 
 
 def _write(fmt: str, path: str, df):
