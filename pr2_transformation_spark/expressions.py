@@ -1,10 +1,11 @@
 """Row-level expression builders.
 
-Every builder returns a :class:`Clause` carrying (a) the native pyspark
-``Column`` (the real plan — codegen-friendly, no UDFs) and (b) an equivalent
-Spark-SQL text fragment used only for the SQL-audit artifact, mirroring the
-reference's practice of archiving every generated query before execution
-(/root/reference/core/utils.py:54-89).
+Every builder returns a :class:`Clause` carrying (a) a Spark-SQL text
+fragment and (b) an equivalent, lazily built pyspark ``Column``.  The SQL
+text is the plan: every operator projects through one
+``df.selectExpr(*[c.sql ...])`` call, and the same text is archived as the
+SQL-audit artifact, mirroring the reference's practice of archiving every
+generated query before execution (reference ``core/utils.py:54-89``).
 
 Dialect note: the reference emits BigQuery re2 regexes with ``\\1``
 backreferences (/root/reference/core/utils.py:773); Spark/Java uses ``$1``.
@@ -57,8 +58,13 @@ class Clause:
 
 
 def q(name: str) -> str:
-    """Backtick-quote an identifier for the audit SQL."""
-    return f"`{name}`"
+    """Backtick-quote an identifier, doubling any backtick inside it."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value: str) -> str:
+    """Single-quoted Spark-SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def passthrough(name: str) -> Clause:

@@ -24,7 +24,7 @@ def compose_sensitive_tier() -> list[Clause]:
 def sensitive_tier_df(df: DataFrame) -> DataFrame:
     """Select the sensitive-tier columns; fails analysis if any is missing,
     matching the reference's failure mode on absent columns."""
-    return df.select(*[c.column for c in compose_sensitive_tier()])
+    return df.selectExpr(*[c.sql for c in compose_sensitive_tier()])
 
 
 def create_sensitive_tier(
@@ -39,7 +39,7 @@ def create_sensitive_tier(
     if audit_dir:
         sql = render_select_sql(clauses, source_table, destination_table)
         sql_path = save_sql_string(sql, audit_path_for(destination_table, audit_dir))
-    catalog.write(df.select(*[c.column for c in clauses]), destination_table)
+    catalog.write(df.selectExpr(*[c.sql for c in clauses]), destination_table)
     return {
         "status": f"Table {destination_table} successfully created with all transformations applied",
         "submitted_sql_path": sql_path,

@@ -8,6 +8,13 @@ single aggregation pass over the DataFrame: every per-column check becomes
 one aggregate expression, so one job and one scan classifies every column at
 once.  At 100 TB that is the difference between 1 scan and thousands.
 
+The aggregates are composed as Spark-SQL text (one builder per flag family,
+shared by every detector) and a whole batch goes to the engine in one
+``df.selectExpr(...)`` call, the same idiom as the operators' projections.
+Built from pyspark ``Column`` calls they would cost about a dozen Py4J
+round-trips per column, each also capturing its Python call site: ~13 ms
+of driver time per column, more than the scan itself on wide survey tables.
+
 Expression counts are still chunked (config.*_BATCH) so ultra-wide tables
 (~4k survey columns -> ~12k aggregates) don't push whole-stage codegen into
 fallback; the chunks all derive from one cached scan.
@@ -15,6 +22,7 @@ fallback; the chunks all derive from one cached scan.
 
 from __future__ import annotations
 
+import re
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -22,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from . import config
+from .expressions import q, sql_str
 
 
 def string_columns(df: DataFrame) -> list[str]:
@@ -35,26 +44,60 @@ def _chunks(xs: list, size: int):
         yield xs[i : i + size]
 
 
-def binary_columns(df: DataFrame, batch_size: int = config.BINARY_DETECTION_BATCH) -> list[str]:
-    """STRING columns whose every value is "0", "1", "" or NULL.
+def _binary_flag_sql(name: str) -> str:
+    """Aggregate that is true iff every value is "0", "1", "" or NULL.
 
-    Reference semantics (/root/reference/core/utils.py:406-408):
-    ``COUNTIF(NOT (c="0" OR c="1" OR c IS NULL OR c="")) = 0`` — note an
-    all-NULL column therefore *is* binary.  One aggregation pass instead of
+    Equivalent to the reference's
+    ``COUNTIF(NOT (c="0" OR c="1" OR c IS NULL OR c="")) = 0``
+    (reference ``core/utils.py:406-408``): NULL folds into "" — note an
+    all-NULL column therefore *is* binary.
+    """
+    return f"count_if(coalesce({q(name)}, '') NOT IN ('0', '1', '')) = 0"
+
+
+_DOMAIN_SQL = ", ".join(sql_str(v) for v in config.FALSE_ARRAY_VALUES)
+_BRACKETED_DOMAIN = [
+    v for v in config.FALSE_ARRAY_VALUES if re.fullmatch(config.BRACKETED_NINE_DIGIT_PATTERN, v)
+]
+
+
+def _false_array_flag_sql(name: str) -> str:
+    """Aggregate deciding the strict false-array checks.
+
+    Equivalent to the reference's three checks but **distinct-free**: under
+    check 2 every non-null value lies in ``config.FALSE_ARRAY_VALUES`` (3
+    values), so COUNT(DISTINCT c) BETWEEN 1 AND 3 collapses to "some
+    non-null exists", and "<=1 distinct bracketed CID" collapses to "at
+    most one of the bracketed domain values is present".  This matters at
+    scale: Spark rewrites multi-column COUNT(DISTINCT) aggregates with an
+    Expand operator that replicates every input row once per distinct
+    aggregate — 2 distincts x 100-column batches meant ~200x shuffle
+    amplification; presence flags keep the pass a plain one-shuffle-free
+    partial aggregation.
+    """
+    c = q(name)
+    n_present = " + ".join(
+        f"CAST(count_if({c} = {sql_str(v)}) > 0 AS INT)" for v in _BRACKETED_DOMAIN
+    )
+    return f"count_if({c} NOT IN ({_DOMAIN_SQL})) = 0 AND count({c}) > 0 AND {n_present} <= 1"
+
+
+def _eval_flags(df: DataFrame, flags: list[str]) -> list[bool]:
+    """Evaluate boolean aggregates over ``df`` in one aggregation pass; the
+    whole batch crosses Py4J in one ``selectExpr`` call."""
+    row = df.selectExpr(*[f"{sql} AS f{i}" for i, sql in enumerate(flags)]).first()
+    return [bool(v) for v in row]
+
+
+def binary_columns(df: DataFrame, batch_size: int = config.BINARY_DETECTION_BATCH) -> list[str]:
+    """STRING columns whose every value is "0", "1", "" or NULL
+    (:func:`_binary_flag_sql`).  One aggregation pass instead of
     ceil(N/500) table scans; returns names in input-schema order.
     """
-    cols = string_columns(df)
-    if not cols:
-        return []
     found: list[str] = []
-    for batch in _chunks(cols, batch_size):
-        aggs = []
-        for name in batch:
-            c = F.col(name)
-            offending = ~((c == "0") | (c == "1") | c.isNull() | (c == ""))
-            aggs.append((F.count_if(offending) == 0).alias(name))
-        row = df.agg(*aggs).first()
-        found.extend(name for name in batch if row[name])
+    for batch in _chunks(string_columns(df), batch_size):
+        hits = _eval_flags(df, [_binary_flag_sql(name) for name in batch])
+        found.extend(name for name, hit in zip(batch, hits) if hit)
     return found
 
 
@@ -95,56 +138,26 @@ def strict_false_array_columns(
     """Columns whose data proves them false arrays (or, fast path, whose
     names match the reference file).
 
-    Computational mode checks, per column (parity with
+    Computational mode checks, per STRING column (parity with
     /root/reference/core/utils.py:644-678, collapsed from 3 scalar
     subqueries/column into aggregates on one scan):
 
       1. 1 <= COUNT(DISTINCT c) <= 3  (some non-null value, few distincts);
       2. no non-null value outside ``config.FALSE_ARRAY_VALUES``;
       3. at most one distinct value matching ``[<9 digits>]``.
+
+    A non-STRING column holds no bracketed strings, so it is never a false
+    array (comparing it with the string domain would be an ANSI cast error).
     """
-    cols = [c for c in df.columns if c != "Connect_ID"]
     if use_reference:
+        cols = [c for c in df.columns if c != "Connect_ID"]
         return false_array_columns_from_reference(cols, reference_file_path)
-    if not cols:
-        return []
-
     found: list[str] = []
+    cols = [c for c in string_columns(df) if c != "Connect_ID"]
     for batch in _chunks(cols, batch_size):
-        aggs = [_false_array_flag(name) for name in batch]
-        row = df.agg(*aggs).first()
-        found.extend(name for name in batch if row[name])
+        hits = _eval_flags(df, [_false_array_flag_sql(name) for name in batch])
+        found.extend(name for name, hit in zip(batch, hits) if hit)
     return found
-
-
-def _false_array_flag(name: str):
-    """Single aggregate expression deciding the strict false-array checks.
-
-    Equivalent to the reference's three checks but **distinct-free**: under
-    check 2 every non-null value lies in ``config.FALSE_ARRAY_VALUES`` (3
-    values), so COUNT(DISTINCT c) BETWEEN 1 AND 3 collapses to "some
-    non-null exists", and "<=1 distinct bracketed CID" collapses to "at
-    most one of the bracketed domain values is present".  This matters at
-    scale: Spark rewrites multi-column COUNT(DISTINCT) aggregates with an
-    Expand operator that replicates every input row once per distinct
-    aggregate — 2 distincts x 100-column batches meant ~200x shuffle
-    amplification; presence flags keep the pass a plain one-shuffle-free
-    partial aggregation.
-    """
-    import re as _re
-
-    c = F.col(name)
-    bracketed_domain = [
-        v
-        for v in config.FALSE_ARRAY_VALUES
-        if _re.fullmatch(r"\[\d{9}\]", v)
-    ]
-    values_ok = F.count_if(c.isNotNull() & ~c.isin(config.FALSE_ARRAY_VALUES)) == 0
-    some_non_null = F.count_if(c.isNotNull()) > 0
-    n_bracketed_present = sum(
-        (F.count_if(c == v) > 0).cast("int") for v in bracketed_domain
-    )
-    return (values_ok & some_non_null & (n_bracketed_present <= 1)).alias(name)
 
 
 def profile_columns(
@@ -160,28 +173,19 @@ def profile_columns(
 
     Returns ``(binary_cols, false_array_cols)`` in input-schema order.
     """
-    str_cols = set(string_columns(df))
-    cols = list(df.columns)
     bin_found: list[str] = []
     fa_found: list[str] = []
-    for batch in _chunks(cols, batch_size):
-        aggs = []
-        key_of = {}
-        for name in batch:
-            c = F.col(name)
-            if name in str_cols:
-                bad = ~((c == "0") | (c == "1") | c.isNull() | (c == ""))
-                key_of[f"__bin_{name}"] = ("bin", name)
-                aggs.append((F.count_if(bad) == 0).alias(f"__bin_{name}"))
-            if name != "Connect_ID":
-                key_of[f"__fa_{name}"] = ("fa", name)
-                aggs.append(_false_array_flag(name).alias(f"__fa_{name}"))
-        if not aggs:
-            continue
-        row = df.agg(*aggs).first()
-        for alias, (kind, name) in key_of.items():
-            if row[alias]:
-                (bin_found if kind == "bin" else fa_found).append(name)
+    for batch in _chunks(string_columns(df), batch_size):
+        flags = [(bin_found, name, _binary_flag_sql(name)) for name in batch]
+        flags += [
+            (fa_found, name, _false_array_flag_sql(name))
+            for name in batch
+            if name != "Connect_ID"
+        ]
+        hits = _eval_flags(df, [sql for _, _, sql in flags])
+        for (out, name, _), hit in zip(flags, hits):
+            if hit:
+                out.append(name)
     return bin_found, fa_found
 
 
